@@ -23,39 +23,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import BENCH_QUERIES
 from dedupe_archived_files_spark import queries as Q
 from dedupe_archived_files_spark.session import get_spark
-
-ALL_QUERIES = [
-    "exact_dup_groups_events",
-    "exact_dup_clusters_documents",
-    "minhash_lsh_near_dup",
-    "simhash_hamming_pairs",
-    "simhash_banded_near_dup",
-    "connected_components_docs",
-    "lang_id_documents",
-    "quality_scores_documents",
-    "token_counts_documents",
-    "repetition_stats_documents",
-    "dataset_split_documents",
-    "decontaminate_documents",
-    "stratified_sample_documents",
-    "doc_fingerprints",
-    "last_writer_wins_events",
-    "group_stats_documents",
-    "topk_chars_per_lang",
-    "tumbling_window_counts",
-    "embedding_topk_cosine",
-    "embedding_ann_lsh",
-    "embedding_ann_ivf",
-    "embedding_ann_ivf2",
-    "embedding_cosine_near_dup",
-    "multimodal_binary_meta",
-    "sessionize_events",
-    "asof_join_events",
-    "fingerprint_overlap_near_dup",
-    "semantic_dedup_embeddings",
-]
 
 
 def force(df) -> None:
@@ -73,7 +43,7 @@ def main() -> None:
     ap.add_argument("--plan-only", action="store_true")
     args = ap.parse_args()
 
-    names = [q for q in args.queries.split(",") if q] or ALL_QUERIES
+    names = [q for q in args.queries.split(",") if q] or BENCH_QUERIES
     spark = get_spark(app_name="bench_extra")
     sf_dir = args.sf_dir
 

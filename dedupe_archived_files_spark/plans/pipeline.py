@@ -66,18 +66,6 @@ def exact_star_edges(pages_text: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 def run_pipeline(pages: DataFrame, cfg: PipelineConfig | None = None) -> PipelineResult:
     cfg = (cfg or PipelineConfig()).validated()
-    import os as _os
-    import time as _time
-
-    _prof = _os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-    _t0 = _time.time()
-
-    def _mark(name: str) -> None:
-        nonlocal _t0
-        if _prof:
-            print(f"[pipeline] {name}: {_time.time() - _t0:.2f}s", flush=True)
-            _t0 = _time.time()
-
     # Scale-adaptive parallelism floor (optimization r6, guide §2.2/§6): a
     # single-row-group parquet input scans as ONE task, which would serialize
     # the fused extract+featurize UDF on one core; redistribute once when the
@@ -119,7 +107,6 @@ def run_pipeline(pages: DataFrame, cfg: PipelineConfig | None = None) -> Pipelin
     # UDF partitions it needs (observed as duplicated Python work + "Block
     # already exists" races). One cheap count() builds the cache exactly once.
     n_docs = sig.count()
-    _mark("sig_build")
     pages_text = full
 
     # n_docs sizes the blocking agg's repartition by data volume (see
@@ -130,7 +117,6 @@ def run_pipeline(pages: DataFrame, cfg: PipelineConfig | None = None) -> Pipelin
     # prune — two subtrees of one downstream query that AQE schedules
     # concurrently, each otherwise recomputing the whole blocking subtree
     cand.count()
-    _mark("cand_build")
     scored = pair_features(sig, cand)
     near_edges = verified_edges(scored, cfg)
     exact_edges = exact_star_edges(sig, cfg)
@@ -143,10 +129,8 @@ def run_pipeline(pages: DataFrame, cfg: PipelineConfig | None = None) -> Pipelin
         .persist()
     )
     edges.count()
-    _mark("edges_build")
 
     labels = connected_components(edges.select("url_a", "url_b"), cfg)
-    _mark("cc")
     clusters = resolve_clusters(labels)
     return PipelineResult(
         pages_text=pages_text,

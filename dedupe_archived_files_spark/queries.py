@@ -162,6 +162,94 @@ def quick_block_verify_documents(spark, sf_dir, max_block_size: int | None = Non
 
 TAU = 0.9
 
+# Broadcast-hint gate for per-row side tables (features, groups, members):
+# below this many rows (~500 MB at ~2 KB/row) the table ships once to every
+# executor; above it the hint is dropped and the planner's shuffled join
+# takes over. Checkpointed inputs carry no size statistics, so without the
+# hint the planner would shuffle the (much larger) pair side instead.
+BROADCAST_MAX_ROWS = 250_000
+
+
+def _broadcast_if_fits(df: DataFrame, n_rows: int) -> DataFrame:
+    return F.broadcast(df) if n_rows <= BROADCAST_MAX_ROWS else df
+
+
+def _collapse(df: DataFrame, id_col: str, key_cols: list[str]):
+    """Exact-duplicate-set collapse: one representative (min ``id_col``) per
+    group of rows with equal ``key_cols``. ``df`` must be pinned by the
+    caller — the group agg, the membership join and the rep semi-join all
+    read it. Returns ``(n_groups, members, reps)``:
+
+    * ``n_groups`` — exact group count, read off the pinned group table;
+    * ``members`` — ``(member, rep, cnt, *key_cols)`` per row, pinned and
+      broadcast-hinted while it fits (the hint rides through the projections
+      and filters ``_expand`` applies, so every expansion join ships it
+      once); rows with a NULL key drop out of the equi-join;
+    * ``reps`` — the rows of ``df`` that represent their group, pinned.
+
+    The group table feeds the membership join and the rep semi-join,
+    ``members`` both expansion joins, and minhash's ``reps`` the band build
+    and the verify attach — so each is eager-checkpointed and the group agg
+    and membership join run once, not once per consumer."""
+    g = (
+        df.groupBy(*key_cols)
+        .agg(F.min(id_col).alias("rep"), F.count("*").alias("cnt"))
+        .localCheckpoint(eager=True)
+    )
+    n_groups, n_rows = g.agg(F.count("*"), F.sum("cnt")).first()
+    g_b = _broadcast_if_fits(g, n_groups)
+    members = (
+        df.join(g_b, key_cols)
+        .select(F.col(id_col).alias("member"), "rep", "cnt", *key_cols)
+        .localCheckpoint(eager=True)
+    )
+    reps = df.join(
+        g_b.select(F.col("rep").alias(id_col)), id_col, "left_semi"
+    ).localCheckpoint(eager=True)
+    return n_groups, _broadcast_if_fits(members, n_rows or 0), reps
+
+
+def _expand(
+    rep_pairs: DataFrame,
+    members: DataFrame,
+    id_a: str,
+    id_b: str,
+    score: str,
+    intra_ok,
+) -> DataFrame:
+    """Expand verified representative pairs back to member pairs —
+    output-proportional and lossless:
+
+    * cross-group: every member pair (x in A, y in B) scores exactly like
+      (repA, repB) by set identity; least/greatest restores the
+      ``id_a < id_b`` contract (member ids interleave arbitrarily);
+    * intra-group: every member pair of a duplicated group at ``score`` 1.0,
+      emitted without re-verifying — only over members where ``intra_ok``
+      holds, the rows whose self-comparison the verify would pass (the
+      degenerate-input guard: empty token sets, vectors with a NULL cosine)."""
+    ma = members.select(F.col("rep").alias(id_a), F.col("member").alias("_xa"))
+    mb = members.select(F.col("rep").alias(id_b), F.col("member").alias("_xb"))
+    cross = (
+        rep_pairs.join(ma, id_a)
+        .join(mb, id_b)
+        .select(
+            F.least("_xa", "_xb").alias(id_a),
+            F.greatest("_xa", "_xb").alias(id_b),
+            score,
+        )
+    )
+    dup = members.filter((F.col("cnt") > 1) & intra_ok).select("rep", "member")
+    p, q = dup.alias("p"), dup.alias("q")
+    intra = p.join(
+        q,
+        (F.col("p.rep") == F.col("q.rep")) & (F.col("p.member") < F.col("q.member")),
+    ).select(
+        F.col("p.member").alias(id_a),
+        F.col("q.member").alias(id_b),
+        F.lit(1.0).alias(score),
+    )
+    return cross.unionByName(intra)
+
 
 def near_dup_jaccard_pairs(spark, sf_dir):
     """Brute-force verification metric: same-lang doc pairs with distinct-token
@@ -259,35 +347,13 @@ def minhash_lsh_near_dup(spark, sf_dir):
     # the doc count — candidate volume then shrinks >= (docs/groups)^2 >= 4x,
     # which clears the tier's ~6-small-stage fixed cost with margin at every
     # scale measured; milder duplication keeps the status-quo plan.
+    # The HLL estimate only decides engagement; the broadcast gates downstream
+    # use _collapse's exact group count.
     rep_mode = 2 * stats["n_groups"] <= stats["n_docs"]
     if rep_mode:
-        # groups: one exchange over slim keys; rep = min(doc_id) is
-        # deterministic. Broadcast both the group table (membership attach)
-        # and the rep-id list (LSH-side semi-join) while they fit — past
-        # ~250k groups the planner's shuffled joins on the slim keys take
-        # over (same scale gate as the verify attach below).
-        # Each of g / m / d_lsh feeds several downstream subtrees (feats a+b,
-        # ma/mb, intra self-join both sides, band build) — eager-checkpoint
-        # all three so the group agg and the membership join run once, not
-        # once per consumer (same rationale as the d/bands pins above; all
-        # three are <= corpus-slim, d_lsh <= half of d by the gate).
-        g = (
-            d.groupBy("lang", "n_toks", "k1", "k2")
-            .agg(F.min("doc_id").alias("rep"), F.count("*").alias("cnt"))
-            .localCheckpoint(eager=True)
-        )
-        g_b = F.broadcast(g) if stats["n_groups"] <= 250_000 else g
-        # membership (doc_id -> rep): docs with NULL n_toks (NULL text) drop
-        # out of the equi-join — harmless, they can never pair (no band rows)
-        m = (
-            d.join(g_b, ["lang", "n_toks", "k1", "k2"])
-            .select("doc_id", "rep", "cnt", "n_toks")
-            .localCheckpoint(eager=True)
-        )
-        d_lsh = d.join(
-            g_b.select(F.col("rep").alias("doc_id")), "doc_id", "left_semi"
-        ).localCheckpoint(eager=True)
-        n_lsh = stats["n_groups"]
+        # NULL-text docs (NULL n_toks) drop out of the membership equi-join —
+        # harmless, they can never pair (no band rows)
+        n_lsh, members, d_lsh = _collapse(d, "doc_id", ["lang", "n_toks", "k1", "k2"])
     else:
         d_lsh = d
         n_lsh = stats["n_docs"]
@@ -346,14 +412,13 @@ def minhash_lsh_near_dup(spark, sf_dir):
     # (guide §3.1: checkpointed inputs carry no size statistics, so the
     # planner would otherwise shuffle the CANDIDATE side — tens of millions
     # of rows at sf1.0 — by doc_id twice; the feature side is n_lsh × ~2 KB
-    # and ships once to every executor instead). Scale-adaptive: beyond
-    # ~250k rows (~500 MB) the hint is dropped and the planner's shuffled
-    # join takes over.
-    feats = d_lsh.select(
-        "doc_id", F.col("n_toks").alias("nt"), F.col("tok_hashes").alias("th")
+    # and ships once to every executor instead).
+    feats = _broadcast_if_fits(
+        d_lsh.select(
+            "doc_id", F.col("n_toks").alias("nt"), F.col("tok_hashes").alias("th")
+        ),
+        n_lsh,
     )
-    if n_lsh <= 250_000:
-        feats = F.broadcast(feats)
     verified = (
         cand.join(
             feats.select(
@@ -386,42 +451,17 @@ def minhash_lsh_near_dup(spark, sf_dir):
         )
     )
     if rep_mode:
-        # Expansion back to member pairs — output-proportional, lossless:
-        # * cross-group: every member pair (x in A, y in B) has jac(x,y) ==
-        #   jac(repA, repB) by set identity; least/greatest restores the
-        #   doc_id_a < doc_id_b contract (member ids interleave arbitrarily);
-        # * intra-group: identical non-empty sets give i == na == nb, so the
-        #   verify arithmetic yields EXACTLY na/(na+nb-na) == 1.0 — emitted
-        #   as the literal without re-verifying; NULL/empty sets are excluded
-        #   (n_toks > 0) exactly as the band join excludes them.
-        rep_pairs = verified.select("doc_id_a", "doc_id_b", "jac")
-        ma = m.select(F.col("rep").alias("doc_id_a"), F.col("doc_id").alias("da"))
-        mb = m.select(F.col("rep").alias("doc_id_b"), F.col("doc_id").alias("db"))
-        if stats["n_docs"] <= 250_000:
-            ma, mb = F.broadcast(ma), F.broadcast(mb)
-        cross = (
-            rep_pairs.join(ma, "doc_id_a")
-            .join(mb, "doc_id_b")
-            .select(
-                F.least("da", "db").alias("doc_id_a"),
-                F.greatest("da", "db").alias("doc_id_b"),
-                "jac",
-            )
+        # identical non-empty sets give i == na == nb, so the verify yields
+        # EXACTLY 1.0 for intra-group pairs; NULL/empty sets are excluded
+        # (n_toks > 0) exactly as the band join excludes them
+        verified = _expand(
+            verified.select("doc_id_a", "doc_id_b", "jac"),
+            members,
+            "doc_id_a",
+            "doc_id_b",
+            "jac",
+            F.col("n_toks") > 0,
         )
-        dup_m = m.filter((F.col("cnt") > 1) & (F.col("n_toks") > 0)).select(
-            "rep", "doc_id"
-        )
-        p, q = dup_m.alias("p"), dup_m.alias("q")
-        intra = p.join(
-            q,
-            (F.col("p.rep") == F.col("q.rep"))
-            & (F.col("p.doc_id") < F.col("q.doc_id")),
-        ).select(
-            F.col("p.doc_id").alias("doc_id_a"),
-            F.col("q.doc_id").alias("doc_id_b"),
-            F.lit(1.0).alias("jac"),
-        )
-        verified = cross.unionByName(intra)
     return verified.select("doc_id_a", "doc_id_b", F.round("jac", 4).alias("jac"))
 
 
@@ -1134,6 +1174,54 @@ N_QUERIES = 20
 TOP_K = 5
 
 
+def _pair_cosine():
+    """The one exact-verify kernel of the vector channels: a pandas UDF over
+    ``(vec_a, vec_b, nrm_a, nrm_b)`` computing each pair's cosine with one
+    fused einsum per Arrow batch (VERDICT r2 #2 — not an interpreted fold).
+    A zero, NaN or infinite norm yields NaN, which Arrow returns as NULL, so
+    such pairs fail every threshold. Marked nondeterministic (guide §4.4): a filter on
+    the UDF-derived column otherwise duplicates the ArrowEvalPython node, so
+    the verify would run twice per candidate pair."""
+    import numpy as np
+
+    @F.pandas_udf("double")
+    def pair_cos(av: pd.Series, bv: pd.Series, an: pd.Series, bn: pd.Series) -> pd.Series:
+        A = np.vstack([np.asarray(v, dtype=np.float64) for v in av])
+        B = np.vstack([np.asarray(v, dtype=np.float64) for v in bv])
+        num = np.einsum("ij,ij->i", A, B)
+        return pd.Series(num / (an.to_numpy() * bn.to_numpy()))
+
+    return pair_cos.asNondeterministic()
+
+
+def _topk_tail(sims: DataFrame) -> DataFrame:
+    """Top-TOP_K neighbours per query under the total order
+    (sim desc, neighbor_id asc), sim rounded to 4 digits."""
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
+    return (
+        sims.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= TOP_K)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.col("rk").cast("long").alias("rk"),
+            F.round("sim", 4).alias("sim"),
+        )
+    )
+
+
+def _rerank_topk(cand: DataFrame, b: DataFrame) -> DataFrame:
+    """Exact rerank of ANN candidates: attach both sides' vectors and norms
+    from the pinned ``b`` (vec_id, v, nrm), score with _pair_cosine, keep the
+    top-k per query."""
+    fx = b.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn"))
+    fy = b.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"), F.col("nrm").alias("nn"))
+    sims = cand.join(fx, "query_id").join(fy, "neighbor_id").withColumn(
+        "sim", _pair_cosine()("qv", "nv", "qn", "nn")
+    )
+    return _topk_tail(sims)
+
+
 def embedding_topk_cosine(spark, sf_dir):
     """Brute-force cosine top-k: the correctness baseline for ANN, batched.
 
@@ -1183,12 +1271,8 @@ def embedding_topk_cosine(spark, sf_dir):
                 }
             )
 
-    sims_df = e.mapInPandas(topk_batches, "query_id long, neighbor_id long, sim double")
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        sims_df.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", F.col("rk").cast("long").alias("rk"), F.round("sim", 4).alias("sim"))
+    return _topk_tail(
+        e.mapInPandas(topk_batches, "query_id long, neighbor_id long, sim double")
     )
 
 
@@ -1307,30 +1391,7 @@ def embedding_ann_lsh(
         .distinct()
     )
 
-    @F.pandas_udf("double")
-    def pair_cos(qv: pd.Series, nv: pd.Series, qn: pd.Series, nn: pd.Series) -> pd.Series:
-        # batched exact rerank: one fused multiply-sum over the Arrow batch
-        A = np.vstack([np.asarray(v, dtype=np.float64) for v in qv])
-        B = np.vstack([np.asarray(v, dtype=np.float64) for v in nv])
-        num = np.einsum("ij,ij->i", A, B)
-        return pd.Series(num / (qn.to_numpy() * nn.to_numpy()))
-
-    fx = b.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn"))
-    fy = b.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"), F.col("nrm").alias("nn"))
-    sims = cand.join(fx, "query_id").join(fy, "neighbor_id").withColumn(
-        "sim", pair_cos(F.col("qv"), F.col("nv"), F.col("qn"), F.col("nn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rk").cast("long").alias("rk"),
-            F.round("sim", 4).alias("sim"),
-        )
-    )
+    return _rerank_topk(cand, b)
 
 
 IVF_MAX_CENTROIDS = 4096   # hard cap: driver collect + per-batch matmul bound
@@ -1364,6 +1425,25 @@ def _spherical_kmeans(X, k: int, sweeps: int = IVF_LLOYD_SWEEPS):
         nonempty = nrm[:, 0] > 1e-12
         C[nonempty] = sums[nonempty] / nrm[nonempty]
     return C
+
+
+def _train_centroids(e: DataFrame, n: int, k: int):
+    """Driver-side k-means training for the IVF and SemDeDup quantizers:
+    ``_spherical_kmeans`` over the ``min(n, max(8k, 2048), IVF_TRAIN_SAMPLE)``
+    smallest-id rows of ``e`` (vec_id, v). Smallest ids, not
+    ``vec_id < sample_n`` (ADVICE r5): the latter yields a tiny or empty
+    sample on sparse or offset id spaces, while this is the identical row set
+    on dense 0-based tables (bit-identical centroids) and a well-defined
+    non-empty sample everywhere else. TakeOrderedAndProject keeps the collect
+    bounded to the sample."""
+    import numpy as np
+
+    sample_n = min(n, max(8 * k, 2048), IVF_TRAIN_SAMPLE)
+    srows = sorted(
+        e.orderBy("vec_id").limit(sample_n).collect(), key=lambda r: r["vec_id"]
+    )
+    X = np.vstack([np.asarray(r["v"], dtype=np.float64) for r in srows])
+    return _spherical_kmeans(X, k)
 
 
 def ivf_n_centroids(n: int, n_probe: int = IVF_N_PROBE) -> int:
@@ -1449,18 +1529,7 @@ def embedding_ann_ivf(
     e = raw.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    sample_n = min(n, max(8 * n_centroids, 2048), IVF_TRAIN_SAMPLE)
-    # Deterministic sample WITHOUT the id-density assumption (ADVICE r5:
-    # `vec_id < sample_n` yields a tiny/empty sample on sparse or offset id
-    # spaces): take the sample_n smallest ids — identical row set on the
-    # dense 0-based driver tables (bit-identical centroids/output), a
-    # well-defined non-empty sample everywhere else. TakeOrderedAndProject
-    # keeps the collect bounded to sample_n rows.
-    srows = sorted(
-        e.orderBy("vec_id").limit(sample_n).collect(), key=lambda r: r["vec_id"]
-    )
-    X = np.vstack([np.asarray(r["v"], dtype=np.float64) for r in srows])
-    C = _spherical_kmeans(X, n_centroids)
+    C = _train_centroids(e, n, n_centroids)
     probe = n_probe
 
     from pyspark.sql import types as T
@@ -1509,29 +1578,7 @@ def embedding_ann_ivf(
         .distinct()
     )
 
-    @F.pandas_udf("double")
-    def pair_cos(qv: pd.Series, nv: pd.Series, qn: pd.Series, nn: pd.Series) -> pd.Series:
-        A = np.vstack([np.asarray(v, dtype=np.float64) for v in qv])
-        B = np.vstack([np.asarray(v, dtype=np.float64) for v in nv])
-        num = np.einsum("ij,ij->i", A, B)
-        return pd.Series(num / (qn.to_numpy() * nn.to_numpy()))
-
-    fx = b.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn"))
-    fy = b.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"), F.col("nrm").alias("nn"))
-    sims = cand.join(fx, "query_id").join(fy, "neighbor_id").withColumn(
-        "sim", pair_cos(F.col("qv"), F.col("nv"), F.col("qn"), F.col("nn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rk").cast("long").alias("rk"),
-            F.round("sim", 4).alias("sim"),
-        )
-    )
+    return _rerank_topk(cand, b)
 
 
 IVF2_MAX_SUB = 256        # per-coarse-cell sub-centroid cap (level-2 fan-out)
@@ -1643,18 +1690,7 @@ def embedding_ann_ivf2(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
     # ---- level 1: coarse quantizer (same bounded driver train as embedding_ann_ivf)
-    sample_n = min(n, max(8 * k1, 2048), IVF_TRAIN_SAMPLE)
-    # Deterministic sample WITHOUT the id-density assumption (ADVICE r5:
-    # `vec_id < sample_n` yields a tiny/empty sample on sparse or offset id
-    # spaces): take the sample_n smallest ids — identical row set on the
-    # dense 0-based driver tables (bit-identical centroids/output), a
-    # well-defined non-empty sample everywhere else. TakeOrderedAndProject
-    # keeps the collect bounded to sample_n rows.
-    srows = sorted(
-        e.orderBy("vec_id").limit(sample_n).collect(), key=lambda r: r["vec_id"]
-    )
-    X = np.vstack([np.asarray(r["v"], dtype=np.float64) for r in srows])
-    C1 = _spherical_kmeans(X, k1)
+    C1 = _train_centroids(e, n, k1)
     probe1 = n_probe1
 
     from pyspark.sql import types as T
@@ -1810,29 +1846,7 @@ def embedding_ann_ivf2(
         stats["candidates"] = cand.count()
         stats["cand_per_query"] = stats["candidates"] / max(1, n_queries)
 
-    @F.pandas_udf("double")
-    def pair_cos(qv: pd.Series, nv: pd.Series, qn: pd.Series, nn: pd.Series) -> pd.Series:
-        A = np.vstack([np.asarray(v, dtype=np.float64) for v in qv])
-        B = np.vstack([np.asarray(v, dtype=np.float64) for v in nv])
-        num = np.einsum("ij,ij->i", A, B)
-        return pd.Series(num / (qn.to_numpy() * nn.to_numpy()))
-
-    fx = b.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn"))
-    fy = b.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"), F.col("nrm").alias("nn"))
-    sims = cand.join(fx, "query_id").join(fy, "neighbor_id").withColumn(
-        "sim", pair_cos(F.col("qv"), F.col("nv"), F.col("qn"), F.col("nn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rk").cast("long").alias("rk"),
-            F.round("sim", 4).alias("sim"),
-        )
-    )
+    return _rerank_topk(cand, b)
 
 
 COSINE_TAU = 0.3
@@ -2297,41 +2311,25 @@ def semantic_dedup_embeddings(
     if rep_mode:
         # Group identity on the exact double arrays the verify consumes:
         # (xxhash64, murmur3) — the same ~96-bit two-hash regime as the
-        # minhash collapse. Training below still samples the FULL corpus
-        # (identical centroids → identical assignments → bit-identical
-        # output); only assign/pair/verify shrink to representatives.
+        # minhash collapse — plus the flag the intra-clique guard reads (a
+        # function of the vector, so it never splits a group): the verify's
+        # self-cosine is non-NULL exactly when the squared norm is positive
+        # and finite (zero, NaN and infinite norms all come back NULL).
+        # Training below still samples the FULL corpus (identical centroids
+        # → identical assignments → bit-identical output); only
+        # assign/pair/verify shrink to representatives.
+        sq = F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x)
         ek = e.select(
-            "vec_id", "v", F.xxhash64("v").alias("kx"), F.hash("v").alias("km")
+            "vec_id",
+            "v",
+            F.xxhash64("v").alias("kx"),
+            F.hash("v").alias("km"),
+            ((sq > 0) & (sq < float("inf"))).alias("nrm_ok"),
         ).localCheckpoint(eager=True)
-        g = (
-            ek.groupBy("kx", "km")
-            .agg(F.min("vec_id").alias("rep"), F.count("*").alias("cnt"))
-            .localCheckpoint(eager=True)
-        )
-        g_b = F.broadcast(g) if n <= 250_000 else g
-        memb = (
-            ek.select("vec_id", "kx", "km")
-            .join(g_b, ["kx", "km"])
-            .select("vec_id", "rep", "cnt")
-            .localCheckpoint(eager=True)
-        )
-        e_work = ek.join(
-            g_b.select(F.col("rep").alias("vec_id")), "vec_id", "left_semi"
-        ).select("vec_id", "v")
+        _, members, e_work = _collapse(ek, "vec_id", ["kx", "km", "nrm_ok"])
     else:
         e_work = e
-    sample_n = min(n, max(8 * k, 2048), IVF_TRAIN_SAMPLE)
-    # Deterministic sample WITHOUT the id-density assumption (ADVICE r5:
-    # `vec_id < sample_n` yields a tiny/empty sample on sparse or offset id
-    # spaces): take the sample_n smallest ids — identical row set on the
-    # dense 0-based driver tables (bit-identical centroids/output), a
-    # well-defined non-empty sample everywhere else. TakeOrderedAndProject
-    # keeps the collect bounded to sample_n rows.
-    srows = sorted(
-        e.orderBy("vec_id").limit(sample_n).collect(), key=lambda r: r["vec_id"]
-    )
-    X = np.vstack([np.asarray(r["v"], dtype=np.float64) for r in srows])
-    C = _spherical_kmeans(X, k)
+    C = _train_centroids(e, n, k)
     m = min(SEMDEDUP_ASSIGN, C.shape[0])
 
     from pyspark.sql import types as T
@@ -2383,18 +2381,6 @@ def semantic_dedup_embeddings(
         .distinct()
     )
 
-    @F.pandas_udf("double")
-    def pair_cos(av: pd.Series, bv: pd.Series, an: pd.Series, bn: pd.Series) -> pd.Series:
-        A = np.vstack([np.asarray(v, dtype=np.float64) for v in av])
-        B = np.vstack([np.asarray(v, dtype=np.float64) for v in bv])
-        num = np.einsum("ij,ij->i", A, B)
-        return pd.Series(num / (an.to_numpy() * bn.to_numpy()))
-
-    # asNondeterministic (guide §4.4): the tau filter on the UDF-derived
-    # `sim` column otherwise duplicates the ArrowEvalPython node (verify ran
-    # twice per candidate pair in the round-5 plan)
-    pair_cos = pair_cos.asNondeterministic()
-
     fa = b.select(
         F.col("vec_id").alias("vec_id_a"), F.col("v").alias("av"), F.col("nrm").alias("an")
     )
@@ -2404,47 +2390,18 @@ def semantic_dedup_embeddings(
     res = (
         cand.join(fa, "vec_id_a")
         .join(fb, "vec_id_b")
-        .withColumn("sim", F.round(pair_cos("av", "bv", "an", "bn"), 4))
+        .withColumn("sim", F.round(_pair_cosine()("av", "bv", "an", "bn"), 4))
         .filter(F.col("sim") >= tau)
         .select("vec_id_a", "vec_id_b", "sim")
     )
     if rep_mode:
-        # Expansion to member pairs (lossless, output-proportional):
-        # cross-group pairs inherit the rep pair's sim — the verify computes
-        # it from the identical double arrays/norms any member carries;
-        # intra-group pairs emit sim = 1.0, which is exactly what the verify
-        # yields for identical vectors (|num/denom - 1| <= a few ulps, so
-        # the HALF_UP 4-digit rounding is 1.0 bit-for-bit).
-        ma = memb.select(F.col("rep").alias("vec_id_a"), F.col("vec_id").alias("xa"))
-        mb = memb.select(F.col("rep").alias("vec_id_b"), F.col("vec_id").alias("xb"))
-        if n <= 250_000:
-            ma, mb = F.broadcast(ma), F.broadcast(mb)
-        cross = (
-            res.join(ma, "vec_id_a")
-            .join(mb, "vec_id_b")
-            .select(
-                F.least("xa", "xb").alias("vec_id_a"),
-                F.greatest("xa", "xb").alias("vec_id_b"),
-                "sim",
-            )
+        # Identical vectors verify to sim 1.0 (|num/denom - 1| <= a few ulps,
+        # so the HALF_UP 4-digit rounding is 1.0 bit-for-bit) — except those
+        # whose cosine is NULL (nrm_ok false); and no identical pair clears a
+        # tau above 1.
+        res = _expand(
+            res, members, "vec_id_a", "vec_id_b", "sim", F.col("nrm_ok") & F.lit(tau <= 1.0)
         )
-        dup = memb.filter(F.col("cnt") > 1).select("rep", "vec_id")
-        p, q = dup.alias("p"), dup.alias("q")
-        if n <= 250_000:
-            q = F.broadcast(q)  # keeps the clique self-join off a sort-merge
-        intra = p.join(
-            q,
-            (F.col("p.rep") == F.col("q.rep"))
-            & (F.col("p.vec_id") < F.col("q.vec_id")),
-        ).select(
-            F.col("p.vec_id").alias("vec_id_a"),
-            F.col("q.vec_id").alias("vec_id_b"),
-            F.lit(1.0).alias("sim"),
-        )
-        if tau <= 1.0:
-            res = cross.unionByName(intra)
-        else:  # degenerate tau: identical vectors cannot clear it either
-            res = cross
     return res
 
 

@@ -1,14 +1,17 @@
 """Local simulation of the driver's correctness gate: run every
-__spark_entry__.queries() entry at sf0.01 and compare against oracle_sql()
-via DuckDB — row count, column names, and an order-insensitive value hash.
+__spark_entry__.queries() entry (sf0.01 by default, any scale factor on
+request) and compare against oracle_sql() via DuckDB — row count, column
+names, and an order-insensitive value hash — printing each query's time.
 
-Usage: python scripts/check_oracles.py [sf_dir] [query ...]
+Usage: python scripts/check_oracles.py [sf_dir] [--queries name1,name2]
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -42,8 +45,12 @@ def value_hash(df: pd.DataFrame) -> str:
 
 
 def main() -> int:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("--queries", default="", help="comma-separated subset")
+    args = ap.parse_args()
+    sf = args.sf_dir
+    only = {q for q in args.queries.split(",") if q}
     spark = get_spark(app_name="check_oracles", master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
@@ -55,15 +62,17 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.time()
         try:
             sdf = fn(spark, sf).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name:32s} spark error: {str(e)[:200]}")
             failures += 1
             continue
+        secs = f"{time.time() - t0:.1f}s"
         osql = oracles.get(name)
         if osql is None:
-            print(f"ROWS  {name:32s} spark_rows={len(sdf)} (no oracle)")
+            print(f"ROWS  {name:32s} spark_rows={len(sdf)} (no oracle) {secs}")
             continue
         try:
             odf = con.sql(osql).df()
@@ -84,8 +93,9 @@ def main() -> int:
             print(f"FAIL  {name:32s} {'; '.join(problems)}")
             failures += 1
         else:
-            print(f"OK    {name:32s} rows={len(sdf)}")
+            print(f"OK    {name:32s} rows={len(sdf)} {secs}")
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
+    spark.stop()
     return 1 if failures else 0
 
 

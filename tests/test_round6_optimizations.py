@@ -251,3 +251,45 @@ def test_minhash_rep_collapse_matches_brute_force(spark, tmp_path):
     empty_ids = {r[0] for r in rows if r[3] in ("", None)}
     assert all(a not in empty_ids and b not in empty_ids for a, b, _ in got)
     assert got == truth
+
+
+# ---------------------------------------------------------------------------
+# semantic_dedup_embeddings duplicate-vector collapse: rep-mode output ==
+# full-mode output, including zero- and NaN-norm duplicates
+# ---------------------------------------------------------------------------
+
+def test_semantic_rep_collapse_matches_full_mode(spark, tmp_path):
+    """3x vector duplication forces the rep tier ON (gate: groups*2 <= rows);
+    ``n_hint`` forces the full pipeline on the same table. The fixture covers
+    interleaved member ids (least/greatest ordering), a near-duplicate pair
+    of groups (cross expansion carries the rep-level sim to every member
+    pair), a 3x-duplicated all-zero vector and a 3x-duplicated vector with a
+    NaN element, whose NULL cosines the full pipeline never emits — so their
+    members must not form intra cliques."""
+    rng = np.random.RandomState(11)
+    base = rng.randn(6, 64)
+    base[1] = base[0] + 0.05 * rng.randn(64)  # cross-group near-dup
+    base[4, 7] = np.nan                       # NaN norm
+    base[5] = 0.0                             # zero-norm vector
+    n_rep = 3
+    vecs = [base[j] for _ in range(n_rep) for j in range(len(base))]  # interleaved ids
+    pdf = pd.DataFrame(
+        {
+            "vec_id": np.arange(len(vecs), dtype=np.int64),
+            "label": ["g"] * len(vecs),
+            "embedding": [v.astype("float32") for v in vecs],
+        }
+    )
+    pdf.to_parquet(tmp_path / "embeddings.parquet")
+
+    def pairs(**kw):
+        out = Q.semantic_dedup_embeddings(spark, str(tmp_path), **kw).collect()
+        return sorted((r.vec_id_a, r.vec_id_b, r.sim) for r in out)
+
+    rep = pairs()
+    full = pairs(n_hint=len(vecs))
+    null_ids = {i for i in range(len(vecs)) if i % len(base) in (4, 5)}
+    assert any(s == 1.0 for _, _, s in full)  # intra cliques present
+    assert any(a % 6 == 0 and b % 6 == 1 for a, b, _ in full)  # cross near-dup present
+    assert all(a not in null_ids and b not in null_ids for a, b, _ in full)
+    assert rep == full
