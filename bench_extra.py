@@ -8,7 +8,7 @@ measured artifact; numbers cited in OPTIMIZATION_r06.md name this harness.
 
 Usage:
   python bench_extra.py [--sf-dir DIR] [--runs N] [--queries a,b,c]
-                        [--explain-dir plans/r06] [--suffix _before]
+                        [--explain-dir evidence/r06/plans] [--suffix _before]
                         [--out FILE.json]
 """
 

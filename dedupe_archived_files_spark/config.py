@@ -11,10 +11,6 @@ same semantics, re-based onto web pages:
 * ``quick_hash_threshold`` — reference ``partial_hash_threshold=1 MiB``
                              (core/models.py:97): only bodies >= this get the
                              two-tier quick-then-verify treatment.
-* ``max_iterations``       — reference ``max_recursion_depth=10``
-                             (core/extractor.py:68): caps the connected-components
-                             driver loop the way the reference caps nested-archive
-                             recursion.
 """
 
 from __future__ import annotations
@@ -73,7 +69,6 @@ class PipelineConfig:
     store_buckets: int = 64
 
     # --- clustering ---
-    max_iterations: int = 10         # CC driver-loop cap (reference depth cap)
     # below this edge count, connected components runs as exact driver-side
     # label propagation (a multi-round distributed loop on a small graph is
     # pure scheduler overhead); 0 disables the fast path. Sized by DRIVER
@@ -109,8 +104,6 @@ class PipelineConfig:
             errors.append("tau_jaccard must be in (0, 1]")
         if not (0 < self.simhash_bits <= 63):
             errors.append("simhash_bits must fit a signed 64-bit long")
-        if self.max_iterations < 1:
-            errors.append("max_iterations must be >= 1")
         if self.shingle_size < 1:
             errors.append("shingle_size must be >= 1")
         if self.max_block_size < 2:

@@ -26,6 +26,13 @@ from pyspark.sql import types as T
 from dedupe_archived_files_spark.config import PipelineConfig
 
 
+# Hard cap on large-star/small-star rounds. The alternation converges in
+# O(log^2 n) rounds (Kiveris et al.) and in practice ~log2 n: a 200k-node
+# shuffled-label path needs 16, so 64 is far above any real graph. Hitting
+# it means a bug, so it raises rather than returning partial labels.
+CC_MAX_ROUNDS = 64
+
+
 def _symmetric(edges: DataFrame) -> DataFrame:
     fwd = edges.select(F.col("url_a").alias("u"), F.col("url_b").alias("v"))
     rev = edges.select(F.col("url_b").alias("u"), F.col("url_a").alias("v"))
@@ -135,10 +142,10 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
 def connected_components(edges: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """edges(url_a, url_b) → labels(url, component) where component is the
     minimum url reachable. Runs alternating large-star/small-star until the
-    edge set is stable or cfg.max_iterations is hit (iteration cap mirrors the
-    reference's recursion cap). Edge sets below cfg.cc_driver_threshold take
-    the exact driver union-find fast path (AQE-spirit adaptivity: pick the
-    physical strategy by observed size)."""
+    edge set is stable; a loop still changing after CC_MAX_ROUNDS rounds
+    raises instead of returning partial labels. Edge sets below
+    cfg.cc_driver_threshold take the exact driver union-find fast path
+    (AQE-spirit adaptivity: pick the physical strategy by observed size)."""
     cfg = cfg or PipelineConfig()
     spark = edges.sparkSession
 
@@ -156,12 +163,16 @@ def connected_components(edges: DataFrame, cfg: PipelineConfig | None = None) ->
     if cfg.cc_driver_threshold and cur.count() <= cfg.cc_driver_threshold:
         return _driver_union_find(cur)
     prev_sig = None
-    for _ in range(cfg.max_iterations):
+    for _ in range(CC_MAX_ROUNDS):
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         sig = _checksum(cur)
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in {CC_MAX_ROUNDS} rounds"
+        )
 
     # After convergence every edge is (node, root); nodes that ARE roots appear
     # only on the right side — add their self-labels.

@@ -3,8 +3,8 @@
 
 * J6 — skip unchanged inputs: an archive whose (mtime, size) matches its
   lineage row is not rescanned (core/scanner.py:119-134; models.py:56-60).
-  Here: anti-join the input snapshot on (url, warc_ts) against the processed
-  watermark table.
+  Here: anti-join the input snapshot on url against the processed watermark
+  table, keeping rows newer than the processed capture of their url.
 * J4 — hash-cache probe: reuse stored hashes when (mtime, size) unchanged
   (core/scanner.py:332-339; database.py:160-175). Here: left join against the
   previous pages_text checkpoint + coalesce.
@@ -19,14 +19,22 @@ from pyspark.sql import functions as F
 
 
 def new_or_changed(pages: DataFrame, processed: DataFrame) -> DataFrame:
-    """J6: rows of `pages` not yet committed as processed.
+    """J6: rows of `pages` newer than the committed work.
 
-    `processed` carries (url, warc_ts) of completed work. A re-crawled url
-    (same url, newer warc_ts) does NOT match and is therefore reprocessed —
-    exactly the reference's needs_rescan (models.py:56-60: mtime/size change
-    ⇒ rescan)."""
+    `processed` carries (url, warc_ts) of completed work. A row is kept when
+    its url was never processed, or when its warc_ts is newer than the
+    processed capture of its url — a re-crawl is reprocessed, exactly the
+    reference's needs_rescan (models.py:56-60: mtime/size change ⇒ rescan).
+    An older capture delivered again (a snapshot replaying history) is not
+    "changed": reprocessing it would overwrite the newer committed row."""
+    done = processed.select(
+        F.col("url").alias("__done_url"), F.col("warc_ts").alias("__done_ts")
+    )
     return pages.join(
-        processed.select("url", "warc_ts"), on=["url", "warc_ts"], how="left_anti"
+        done,
+        (F.col("url") == F.col("__done_url"))
+        & (F.col("__done_ts") >= F.col("warc_ts")),
+        "left_anti",
     )
 
 

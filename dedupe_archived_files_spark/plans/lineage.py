@@ -256,25 +256,21 @@ class CheckpointStore:
                 stage, merged_touched, touched, merge_keys[0]
             )
 
-        existing = self.read_stage(stage)
+        # full MERGE: the committed stage is unbucketed, or bucketed under a
+        # different modulus (scoped_merge_ok refused) — one full rewrite, which
+        # also migrates it to the requested layout (scoped thereafter).
+        # read_stage only for its signature-space check of the rows on disk.
+        self.read_stage(stage)
         delta = df.localCheckpoint(eager=True)  # consumed twice below
-        kept = existing.join(
-            delta.select(*merge_keys).distinct(), merge_keys, "left_anti"
+        return self.rewrite_stage(
+            stage,
+            lambda existing: existing.join(
+                delta.select(*merge_keys).distinct(), merge_keys, "left_anti"
+            ).unionByName(delta),
+            key_col=merge_keys[0],
+            bucket_key=bucket_key,
+            n_buckets=n_buckets,
         )
-        merged = kept.unionByName(delta)
-        if bucket_key is not None:
-            # committed stage predates bucketing (or was bucketed under a
-            # different modulus — scoped_merge_ok refused): this merge
-            # migrates it to the requested layout (one full rewrite; scoped
-            # thereafter)
-            merged = merged.withColumn(
-                self.BUCKET_COL, self._bucket_expr(bucket_key, n_buckets)
-            )
-            return self._swap_commit(
-                stage, merged, merge_keys[0], partition_bucketed=True,
-                n_buckets=n_buckets,
-            )
-        return self._swap_commit(stage, merged, merge_keys[0])
 
     def replace_scoped(
         self,
@@ -309,11 +305,12 @@ class CheckpointStore:
         unchanged row it was not required to delete); both copies are
         content-identical by construction, so the survivor is arbitrary.
 
-        Requires a complete (``_SUCCESS``), bucketed data dir — like
+        Requires a complete (``_SUCCESS``), bucketed data dir whose stamped
+        layout matches ``n_buckets`` (:meth:`scoped_merge_ok`) — like
         :meth:`rewrite_stage`, the commit MARKER may have been invalidated by
         the caller's stale-downstream guard (markers are re-written by this
-        merge's own commit). Callers fall back to a full
-        :meth:`rewrite_stage` (which can migrate the layout) otherwise."""
+        merge's own commit). The incremental pipeline recomputes the stage
+        in full otherwise."""
         self.recover_upsert(stage, lineage_key=lineage_key)
         if not self.scoped_merge_ok(stage, n_buckets):
             raise ValueError(

@@ -634,7 +634,7 @@ def connected_components_docs(spark, sf_dir):
         )
         .select(F.col("a.doc_id").alias("url_a"), F.col("b.doc_id").alias("url_b"))
     )
-    labels = connected_components(edges, PipelineConfig(max_iterations=12))
+    labels = connected_components(edges)
     return labels.select(
         F.col("url").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("component"),
@@ -1446,6 +1446,39 @@ def _train_centroids(e: DataFrame, n: int, k: int):
     return _spherical_kmeans(X, k)
 
 
+def _assign_cells(C, p: int):
+    """Nearest-centroid assignment UDF shared by IVF, the IVF2 coarse level
+    and SemDeDup: ``struct(cells, nrm)`` per vector, ``cells`` the ids of the
+    ``p`` rows of ``C`` with the highest cosine, best first, and ``nrm`` its
+    L2 norm. Top-p via argpartition (O(k)/row), then only those p are
+    ordered — a full argsort over k≈4096 columns costs ~10x at 10^6-row
+    corpora."""
+    import numpy as np
+    from pyspark.sql import types as T
+
+    @F.pandas_udf(
+        T.StructType(
+            [
+                T.StructField("cells", T.ArrayType(T.LongType())),
+                T.StructField("nrm", T.DoubleType()),
+            ]
+        )
+    )
+    def assign(vs: pd.Series) -> pd.DataFrame:
+        V = np.vstack([np.asarray(v, dtype=np.float64) for v in vs])
+        nrm = np.sqrt((V * V).sum(axis=1))
+        sims = (V / np.maximum(nrm, 1e-12)[:, None]) @ C.T  # (batch, k)
+        if sims.shape[1] > p:
+            part = np.argpartition(-sims, p - 1, axis=1)[:, :p]
+            rows = np.arange(len(part))[:, None]
+            order = part[rows, np.argsort(-sims[rows, part], axis=1)]
+        else:
+            order = np.argsort(-sims, axis=1)[:, :p]
+        return pd.DataFrame({"cells": list(order.astype(np.int64)), "nrm": nrm})
+
+    return assign
+
+
 def ivf_n_centroids(n: int, n_probe: int = IVF_N_PROBE) -> int:
     """Cell count from BOTH sizing rules, capped at IVF_MAX_CENTROIDS:
 
@@ -1505,8 +1538,6 @@ def embedding_ann_ivf(
     Rows-only driver check (centroids are
     engine-internal); recall vs the brute-force baseline is asserted (and
     printed) in pytest alongside the LSH variant, and reported per bench run."""
-    import numpy as np
-
     if n_queries is None:
         n_queries = N_QUERIES
     raw = _t(spark, sf_dir, "embeddings")
@@ -1530,39 +1561,13 @@ def embedding_ann_ivf(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
     C = _train_centroids(e, n, n_centroids)
-    probe = n_probe
-
-    from pyspark.sql import types as T
-
-    assign_type = T.StructType(
-        [
-            T.StructField("cell", T.LongType()),
-            T.StructField("probe_cells", T.ArrayType(T.LongType())),
-            T.StructField("nrm", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(assign_type)
-    def assign_udf(vs: pd.Series) -> pd.DataFrame:
-        V = np.vstack([np.asarray(v, dtype=np.float64) for v in vs])
-        nrm = np.sqrt((V * V).sum(axis=1))
-        sims = (V / np.maximum(nrm, 1e-12)[:, None]) @ C.T  # (batch, k)
-        order = np.argsort(-sims, axis=1)
-        return pd.DataFrame(
-            {
-                "cell": order[:, 0].astype(np.int64),
-                "probe_cells": list(order[:, :probe].astype(np.int64)),
-                "nrm": nrm,
-            }
-        )
-
     b = (
-        e.withColumn("_a", assign_udf("v"))
+        e.withColumn("_a", _assign_cells(C, n_probe)("v"))
         .select(
             "vec_id",
             "v",
-            F.col("_a.cell").alias("cell"),
-            F.col("_a.probe_cells").alias("probe_cells"),
+            F.col("_a.cells")[0].alias("cell"),
+            F.col("_a.cells").alias("probe_cells"),
             F.col("_a.nrm").alias("nrm"),
         )
         .localCheckpoint(eager=True)  # consumed by probe join AND rerank
@@ -1691,46 +1696,13 @@ def embedding_ann_ivf2(
     )
     # ---- level 1: coarse quantizer (same bounded driver train as embedding_ann_ivf)
     C1 = _train_centroids(e, n, k1)
-    probe1 = n_probe1
-
-    from pyspark.sql import types as T
-
-    assign_type = T.StructType(
-        [
-            T.StructField("cell", T.LongType()),
-            T.StructField("probe_cells", T.ArrayType(T.LongType())),
-            T.StructField("nrm", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(assign_type)
-    def coarse_udf(vs: pd.Series) -> pd.DataFrame:
-        V = np.vstack([np.asarray(v, dtype=np.float64) for v in vs])
-        nrm = np.sqrt((V * V).sum(axis=1))
-        sims = (V / np.maximum(nrm, 1e-12)[:, None]) @ C1.T
-        # top-probe1 via argpartition (O(k1)/row), then order just those p —
-        # a full argsort over k1≈4096 columns costs ~10x at 10^6-row corpora
-        if sims.shape[1] > probe1:
-            part = np.argpartition(-sims, probe1 - 1, axis=1)[:, :probe1]
-            rows = np.arange(len(part))[:, None]
-            order = part[rows, np.argsort(-sims[rows, part], axis=1)]
-        else:
-            order = np.argsort(-sims, axis=1)
-        return pd.DataFrame(
-            {
-                "cell": order[:, 0].astype(np.int64),
-                "probe_cells": list(order[:, :probe1].astype(np.int64)),
-                "nrm": nrm,
-            }
-        )
-
     b = (
-        e.withColumn("_a", coarse_udf("v"))
+        e.withColumn("_a", _assign_cells(C1, n_probe1)("v"))
         .select(
             "vec_id",
             "v",
-            F.col("_a.cell").alias("cell"),
-            F.col("_a.probe_cells").alias("probe_cells"),
+            F.col("_a.cells")[0].alias("cell"),
+            F.col("_a.cells").alias("probe_cells"),
             F.col("_a.nrm").alias("nrm"),
         )
         .localCheckpoint(eager=True)  # feeds train, assign, probe AND rerank
@@ -2268,8 +2240,6 @@ def semantic_dedup_embeddings(
     IVF path established). Driver check is rows-only (centroids are
     engine-internal); recall vs the brute-force all-pairs truth is asserted
     in pytest and reported per bench run."""
-    import numpy as np
-
     if tau is None:
         tau = COSINE_TAU
     raw = _t(spark, sf_dir, "embeddings")
@@ -2332,25 +2302,6 @@ def semantic_dedup_embeddings(
     C = _train_centroids(e, n, k)
     m = min(SEMDEDUP_ASSIGN, C.shape[0])
 
-    from pyspark.sql import types as T
-
-    assign_type = T.StructType(
-        [
-            T.StructField("cells", T.ArrayType(T.LongType())),
-            T.StructField("nrm", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(assign_type)
-    def assign_udf(vs: pd.Series) -> pd.DataFrame:
-        V = np.vstack([np.asarray(v, dtype=np.float64) for v in vs])
-        nrm = np.sqrt((V * V).sum(axis=1))
-        sims = (V / np.maximum(nrm, 1e-12)[:, None]) @ C.T
-        order = np.argsort(-sims, axis=1)
-        return pd.DataFrame(
-            {"cells": list(order[:, :m].astype(np.int64)), "nrm": nrm}
-        )
-
     # Slim-pair shape (optimization r6, guide §2.3/§8): candidate generation
     # and the pair-distinct shuffle carry ONLY (vec_id, cell) / id pairs —
     # the 64-double vectors previously rode through the self-join AND the
@@ -2359,7 +2310,7 @@ def semantic_dedup_embeddings(
     # arithmetic (same einsum, same rounding) sees identical inputs and the
     # output is bit-identical.
     b = (
-        e_work.withColumn("_a", assign_udf("v"))
+        e_work.withColumn("_a", _assign_cells(C, m)("v"))
         .select(
             "vec_id",
             "v",

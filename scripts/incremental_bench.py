@@ -5,7 +5,7 @@ The reference's core economics are skip-unchanged at every tier
 (core/scanner.py:119-134 skips whole archives; :332-339 skips unchanged target
 hashes). This engine's analogue: a re-crawl featurizes ONLY new/changed urls
 and recomputes edges ONLY over blocks whose membership the delta touched
-(plans/pipeline.py::scoped_incremental_edges). This script measures both:
+(plans/pipeline.py::scoped_fresh_edges). This script measures both:
 
     python scripts/incremental_bench.py [n_pages] [cores]
 

@@ -309,7 +309,7 @@ by the pair-volume and sentinel carry-over tests, not by these wall-clocks."""
 ONLY the changed url, re-runs blocking/scoring only over blocks whose
 membership the delta touched, MERGEs into the committed edge table, and
 re-runs connected components only over the components the delta touched
-(`plans/pipeline.py::scoped_incremental_edges` / `scoped_incremental_clusters`
+(`plans/pipeline.py::scoped_fresh_edges` / `scoped_cluster_parts`
 — the reference's skip-unchanged economics at every tier,
 core/scanner.py:119-134):
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from dedupe_archived_files_spark.config import PipelineConfig
@@ -19,6 +20,20 @@ from dedupe_archived_files_spark.plans.pipeline import run_pipeline_checkpointed
 from dedupe_archived_files_spark.synth import recrawl_snapshot
 
 CFG = PipelineConfig()
+
+
+def _replace_bucketed(df, stage_dir):
+    """Swap ``df`` (with its ``__bucket`` column) in as the stage's data,
+    keeping the committed bucketed layout and its modulus stamp — the marker
+    is untouched, so the stage stays committed."""
+    import os
+    import shutil
+
+    swap = stage_dir + ".__poison_tmp"
+    df.write.mode("overwrite").partitionBy("__bucket").parquet(swap)
+    shutil.copy(os.path.join(stage_dir, "_bucket_layout.json"), swap)
+    shutil.rmtree(stage_dir)
+    os.rename(swap, stage_dir)
 
 
 def test_new_or_changed_skips_unchanged(spark, pages_dfs):
@@ -265,11 +280,69 @@ def test_incremental_pipeline_matches_from_scratch(spark, pages_dfs, tmp_path):
     inc_out = sorted((r["url"], r["cluster_id"]) for r in inc.collect())
 
     latest = last_writer_wins(snapshot2, ["url"], "warc_ts")
-    scratch = run_pipeline_checkpointed(
-        latest, str(tmp_path / "scratch"), CFG, incremental=False
-    )
+    scratch = run_pipeline_checkpointed(latest, str(tmp_path / "scratch"), CFG)
     scratch_out = sorted((r["url"], r["cluster_id"]) for r in scratch.collect())
     assert inc_out == scratch_out
+
+
+@pytest.fixture(scope="module")
+def latest_clusters(spark, pages_dfs, tmp_path_factory):
+    """(url, cluster_id) rows of a from-scratch run over the per-url-latest
+    snapshot of pages + the synth re-crawl."""
+    pages, _, _ = pages_dfs
+    recrawl = spark.createDataFrame(recrawl_snapshot(), schema=pages.schema)
+    latest = last_writer_wins(pages.unionByName(recrawl), ["url"], "warc_ts")
+    root = str(tmp_path_factory.mktemp("latest"))
+    out = run_pipeline_checkpointed(latest, root, CFG)
+    return sorted((r["url"], r["cluster_id"]) for r in out.collect())
+
+
+def test_incremental_ignores_redelivered_older_capture(
+    spark, pages_dfs, tmp_path, latest_clusters
+):
+    """A snapshot that delivers an older capture of a committed url again is
+    not a change: the newer committed capture stays, and the clusters equal
+    a from-scratch run over the per-url-latest snapshot."""
+    pages, _, _ = pages_dfs
+    root = str(tmp_path / "older")
+    run_pipeline_checkpointed(pages, root, CFG)
+    recrawl = spark.createDataFrame(recrawl_snapshot(), schema=pages.schema)
+    run_pipeline_checkpointed(pages.unionByName(recrawl), root, CFG)
+    out = run_pipeline_checkpointed(pages, root, CFG)
+
+    recrawl_ts = {r["url"]: r["warc_ts"] for r in recrawl.collect()}
+    stage = spark.read.parquet(f"{root}/pages_text")
+    kept_ts = {
+        r["url"]: r["warc_ts"]
+        for r in stage.filter(F.col("url").isin(list(recrawl_ts))).collect()
+    }
+    assert len(recrawl_ts) == 10
+    assert kept_ts == recrawl_ts
+    assert sorted((r["url"], r["cluster_id"]) for r in out.collect()) == latest_clusters
+
+
+def test_bucket_modulus_change_recomputes_downstream(
+    spark, pages_dfs, tmp_path, latest_clusters
+):
+    """A root committed at another store_buckets takes the fallback both
+    ways: the pages_text upsert rewrites the whole stage (migrating its
+    layout), and edges and clusters are recomputed by the from-scratch body.
+    Output equals a from-scratch run; every stage ends bucketed at the new
+    modulus."""
+    from dedupe_archived_files_spark.plans.lineage import CheckpointStore
+
+    pages, _, _ = pages_dfs
+    root = str(tmp_path / "modulus")
+    run_pipeline_checkpointed(pages, root, PipelineConfig(store_buckets=8))
+    store = CheckpointStore(spark, root)
+    assert not store.scoped_merge_ok("edges", CFG.store_buckets)
+
+    recrawl = spark.createDataFrame(recrawl_snapshot(), schema=pages.schema)
+    out = run_pipeline_checkpointed(pages.unionByName(recrawl), root, CFG)
+    assert sorted((r["url"], r["cluster_id"]) for r in out.collect()) == latest_clusters
+    for stage in ("pages_text", "edges", "clusters"):
+        assert store.is_committed(stage), stage
+        assert store.scoped_merge_ok(stage, CFG.store_buckets), stage
 
 
 def test_scoped_blocking_pair_volume(spark, pages_dfs):
@@ -321,7 +394,8 @@ def test_incremental_edges_merged_not_recomputed(spark, pages_dfs, tmp_path):
     a corpus-wide recompute would have dropped it. Stale edges touching
     re-crawled urls, by contrast, must be deleted."""
     import os
-    import shutil
+
+    from dedupe_archived_files_spark.plans.lineage import CheckpointStore
 
     pages, _, _ = pages_dfs
     root = str(tmp_path / "scopedinc")
@@ -330,9 +404,8 @@ def test_incremental_edges_merged_not_recomputed(spark, pages_dfs, tmp_path):
     recrawl = spark.createDataFrame(recrawl_snapshot(), schema=pages.schema)
     recrawled = {r["url"] for r in recrawl.select("url").collect()}
     edges_dir = os.path.join(root, "edges")
-    # drop the bucket partition column: the poison-write below rewrites the
-    # stage UNBUCKETED, which also exercises the migration branch (scoped
-    # compute + one full bucketing rewrite) of the incremental pipeline
+    # the poison write below keeps the bucketed layout, so the re-run takes
+    # the bucket-scoped edge MERGE
     edges0 = spark.read.parquet(edges_dir).drop("__bucket")
     adjacent = {u for r in edges0.collect() for u in (r["url_a"], r["url_b"])}
     candidates = sorted(
@@ -350,10 +423,11 @@ def test_incremental_edges_merged_not_recomputed(spark, pages_dfs, tmp_path):
         [(min(ru, u), max(ru, u), 0.5, "planted_stale")],
         ["url_a", "url_b", "score", "channel"],
     ).select(*edges0.columns)
-    swap = edges_dir + ".__poison_tmp"
-    edges0.unionByName(fake).unionByName(stale).write.mode("overwrite").parquet(swap)
-    shutil.rmtree(edges_dir)
-    os.rename(swap, edges_dir)  # marker untouched: stage still committed
+    bucket = CheckpointStore._bucket_expr("url_a", CFG.store_buckets)
+    _replace_bucketed(
+        edges0.unionByName(fake).unionByName(stale).withColumn("__bucket", bucket),
+        edges_dir,
+    )
 
     snapshot2 = pages.unionByName(recrawl)
     run_pipeline_checkpointed(snapshot2, root, CFG)
@@ -373,9 +447,7 @@ def test_scoped_clusters_volume_and_equality(spark):
         connected_components,
         resolve_clusters,
     )
-    from dedupe_archived_files_spark.plans.pipeline import (
-        scoped_incremental_clusters,
-    )
+    from dedupe_archived_files_spark.plans.pipeline import scoped_cluster_parts
 
     # old graph: chain {a1,a2,a3}, pair {b1,b2}, pair {c1,c2}, 50 fillers
     old_edges = (
@@ -394,8 +466,13 @@ def test_scoped_clusters_volume_and_equality(spark):
     fresh_urls = spark.createDataFrame([("b1",), ("c1",)], ["url"])
 
     stats: dict = {}
-    inc = scoped_incremental_clusters(
+    aff_ids, fresh_labels = scoped_cluster_parts(
         old_clusters, merged, changed, fresh_urls, CFG, stats=stats
+    )
+    inc = (
+        old_clusters.join(aff_ids, "cluster_id", "left_anti")
+        .unionByName(fresh_labels)
+        .select(*old_clusters.columns)
     )
     scratch = resolve_clusters(connected_components(merged, CFG))
     inc_rows = sorted(tuple(r) for r in inc.collect())
@@ -413,7 +490,6 @@ def test_incremental_clusters_carry_over_not_recomputed(spark, pages_dfs, tmp_pa
     the re-crawl does not touch) in the committed clusters stage survives the
     incremental re-run verbatim — a global recompute would overwrite it."""
     import os
-    import shutil
 
     pages, _, _ = pages_dfs
     root = str(tmp_path / "scopedcc")
@@ -442,10 +518,7 @@ def test_incremental_clusters_carry_over_not_recomputed(spark, pages_dfs, tmp_pa
             F.col("cluster_id")
         ),
     )
-    swap = clusters_dir + ".__poison_tmp"
-    poisoned.write.mode("overwrite").parquet(swap)
-    shutil.rmtree(clusters_dir)
-    os.rename(swap, clusters_dir)  # marker untouched: stage still committed
+    _replace_bucketed(poisoned, clusters_dir)  # keeps the bucketed layout
 
     snapshot2 = pages.unionByName(recrawl)
     run_pipeline_checkpointed(snapshot2, root, CFG)

@@ -87,16 +87,42 @@ def test_connected_components_simple_chain(spark):
 
 def test_connected_components_path_graph(spark):
     """Long path exercises multi-iteration convergence (O(log n) rounds).
-    cc_driver_threshold=0 forces the DISTRIBUTED large-star/small-star loop."""
+    cc_driver_threshold=0 forces the DISTRIBUTED large-star/small-star loop.
+    The second input is a path longer than 2^14 nodes whose labels are
+    shuffled along it: it needs more rounds than a fixed small cap allows,
+    so only a loop run to its fixed point returns one component."""
+    import random
+
     n = 40
     edges = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n)], ["url_a", "url_b"]
     )
-    cfg = PipelineConfig(max_iterations=10, cc_driver_threshold=0)
+    cfg = PipelineConfig(cc_driver_threshold=0)
     labels = connected_components(edges, cfg).collect()
     comps = {r["component"] for r in labels}
     assert comps == {"n000"}
     assert len(labels) == n + 1
+
+    n_long = 20_000
+    names = [f"n{i:05d}" for i in range(n_long)]
+    random.Random(11).shuffle(names)
+    edges = spark.createDataFrame(list(zip(names, names[1:])), ["url_a", "url_b"])
+    labels = connected_components(edges, cfg).collect()
+    assert {r["component"] for r in labels} == {"n00000"}
+    assert len(labels) == n_long
+
+
+def test_connected_components_round_cap_raises(spark, monkeypatch):
+    """A loop that has not converged at the round cap raises instead of
+    returning partial labels."""
+    from dedupe_archived_files_spark.operators import clustering
+
+    monkeypatch.setattr(clustering, "CC_MAX_ROUNDS", 1)
+    edges = spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(40)], ["url_a", "url_b"]
+    )
+    with pytest.raises(RuntimeError, match="1 rounds"):
+        connected_components(edges, PipelineConfig(cc_driver_threshold=0))
 
 
 def test_cc_driver_and_distributed_paths_agree(spark):
